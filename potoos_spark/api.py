@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .config import DetectorConfig, TimeSeriesConfig
 from .detectors import base as detector_base
-from .detectors.windows import extract_anomalies, refine_anomalies
+from .detectors import windows
 from .operators import retrieval
 
 REQUIRED_COLS = {"series_key", "ts_ms", "value"}
@@ -77,23 +77,35 @@ class PotoosSession:
     ) -> AnomalyResult:
         """O4: score + window extraction + metadata. Series shorter than
         ``min_points`` are dropped (set-oriented form of the reference's
-        ValueError guard, client.py:84-85)."""
+        ValueError guard, client.py:84-85).
+
+        Computes at call time, running the detector once: the scores
+        fold into one metadata-scale frame of window rows plus per-series
+        point counts (``windows.window_summary``), held in an eager local
+        checkpoint (with ``refine_algorithm_name`` the refined windows get
+        one of their own). ``anomalies`` is a filter over it and ``meta`` a
+        per-series re-aggregation of it, so reading them runs no detector.
+        ``scores`` stays lazy: reading it re-runs the detector. The
+        checkpoint lives as long as the result: Spark releases it once
+        the returned frames are garbage-collected."""
         cfg = detector_config or self.detector_config
         points = retrieval.min_points_guard(self.check_source(points), min_points)
         scores = detector_base.score(points, cfg, baseline=baseline)
         if cfg.score_only:
-            anomalies = None
-            meta = retrieval.series_metadata(points)
-        else:
-            anomalies = extract_anomalies(
-                scores, cfg.score_threshold, cfg.score_percent_threshold
-            )
-            if cfg.refine_algorithm_name:
-                anomalies = refine_anomalies(
-                    scores, anomalies, cfg.refine_algorithm_name,
-                    cfg.refine_algorithm_params,
-                )
-            meta = retrieval.series_metadata(points, anomalies)
+            meta = retrieval.series_metadata(points).localCheckpoint(eager=True)
+            return AnomalyResult(anomalies=None, scores=scores, meta=meta)
+        summary = windows.window_summary(
+            scores, cfg.score_threshold, cfg.score_percent_threshold
+        ).localCheckpoint(eager=True)
+        anomalies = windows.summary_windows(summary)
+        if cfg.refine_algorithm_name:
+            # refine keeps every window's extent, so meta's window count
+            # still comes from the summary
+            anomalies = windows.refine_anomalies(
+                points, anomalies, cfg.refine_algorithm_name,
+                cfg.refine_algorithm_params,
+            ).localCheckpoint(eager=True)
+        meta = windows.summary_metadata(summary)
         return AnomalyResult(anomalies=anomalies, scores=scores, meta=meta)
 
     def monitor(
@@ -104,10 +116,16 @@ class PotoosSession:
         baseline: Optional[DataFrame] = None,
     ) -> AnomalyResult:
         """O2: the full pipeline — retrieval query then detection — for
-        every series in ``df`` at once. Empty input yields empty result
-        frames (the reference returns None for an empty single series,
+        every series in ``df`` at once, computed when called (see
+        ``detect``: ``anomalies`` and ``meta`` come from a local
+        checkpoint released with the result, ``scores`` stays lazy).
+        Retrieval skips ``read_series``' presentation order, which
+        detection would discard. Empty input yields empty result frames
+        (the reference returns None for an empty single series,
         client.py:134-135; vacuous in set-oriented form)."""
-        points = self.read_series(df, ts_config)
+        points = retrieval.retrieve_series(
+            self.check_source(df), ts_config or self.ts_config
+        )
         return self.detect(points, detector_config, baseline=baseline)
 
     def register_tables(self, data_dir: str, names=None) -> dict:

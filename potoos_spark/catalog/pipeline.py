@@ -570,7 +570,7 @@ def _stream_minhash_dedup_fn(spark, sf_dir):
     # every micro-batch a cache read, which is also exactly the
     # production posture (the batch job rebuilds the index
     # periodically; the stream only reads it).
-    from ..operators.dedup import eager_fill
+    from ..operators.cache import eager_fill
 
     idx = eager_fill(
         lsh_band_index(

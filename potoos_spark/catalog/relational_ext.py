@@ -12,8 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..operators.cache import eager_fill
-
 from .common import QuerySpec, table
 
 

@@ -3,9 +3,9 @@
 The reference delegates this to Luminol's threshold/window extraction
 (scores above an absolute ``score_threshold`` or a
 ``score_percent_threshold`` fraction of the series max become contiguous
-anomaly windows, each carrying its peak point). Spark-first: one ranked
-window per series for the island ids, one hash aggregation for the
-window rows — classic ``rn - rn_above`` segment keying, no Python.
+anomaly windows, each carrying its peak point). Spark-first: one ordered
+window spec per series numbers the islands (one sort, no Python), one
+hash aggregation turns them into window rows.
 """
 
 from __future__ import annotations
@@ -25,6 +25,103 @@ ANOMALY_COLS = (
 )
 
 
+def _islands(
+    scores: DataFrame,
+    score_threshold: Optional[float],
+    score_percent_threshold: Optional[float],
+) -> DataFrame:
+    """``scores`` plus ``__island``: a per-series island id on every
+    above-threshold row, null elsewhere. An island is a maximal run of
+    above-threshold rows in (ts_ms, score) order — score is the
+    tiebreak so duplicate timestamps order identically on every run;
+    rows equal in (ts_ms, score) are equally above or not, so their
+    relative order never changes an island.
+
+    One sort per series: the frame-wide max (percent threshold) and
+    ``lag(score)`` share one Window operator, and the running count of
+    island starts reuses its ordering.
+    """
+    w = W.partitionBy("series_key").orderBy("ts_ms", "score")
+    staged = [F.lag("score").over(w).alias("__prev")]
+    if score_threshold is not None:
+        def above(s):
+            return s >= float(score_threshold)
+    elif score_percent_threshold is not None:
+        frame = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        staged.append(
+            (F.max("score").over(frame) * float(score_percent_threshold))
+            .alias("__thr")
+        )
+
+        def above(s):
+            return (s >= F.col("__thr")) & (s > 0)
+    else:
+        def above(s):
+            return s > 0
+
+    # a null score is never above, so it ends any run it sits in
+    flagged = scores.select("*", *staged).withColumn(
+        "__above", F.coalesce(above(F.col("score")), F.lit(False))
+    )
+    start = flagged.withColumn(
+        "__start",
+        (
+            F.col("__above")
+            & ~F.coalesce(above(F.col("__prev")), F.lit(False))
+        ).cast("int"),
+    )
+    run = F.sum("__start").over(w.rowsBetween(W.unboundedPreceding, 0))
+    return start.withColumn(
+        "__island", F.when(F.col("__above"), run)
+    ).drop("__prev", "__thr", "__above", "__start")
+
+
+def window_summary(
+    scores: DataFrame,
+    score_threshold: Optional[float] = None,
+    score_percent_threshold: Optional[float] = None,
+) -> DataFrame:
+    """Every scored point folded into metadata-scale rows, grouped by
+    (series_key, island-or-null): one row per anomaly window plus, per
+    series with any point outside a window, one row whose ``__island``
+    is null. Each row carries its point count ``__n``, ts extent, peak
+    (the earliest point of maximal score) and max score, so windows
+    (``summary_windows``) and per-series metadata
+    (``summary_metadata``) both come from this frame without another
+    pass over the points."""
+    islands = _islands(scores, score_threshold, score_percent_threshold)
+    return islands.groupBy("series_key", "__island").agg(
+        F.count("*").alias("__n"),
+        F.min("ts_ms").alias("start_ts_ms"),
+        F.max("ts_ms").alias("end_ts_ms"),
+        F.max_by("ts_ms", F.struct(F.col("score"), -F.col("ts_ms"))).alias(
+            "exact_ts_ms"
+        ),
+        F.max("score").alias("anomaly_score"),
+    )
+
+
+def summary_windows(summary: DataFrame) -> DataFrame:
+    """The anomaly-window rows of a ``window_summary``."""
+    return summary.filter(F.col("__island").isNotNull()).select(*ANOMALY_COLS)
+
+
+def summary_metadata(summary: DataFrame) -> DataFrame:
+    """A17 per-series metadata re-aggregated from a ``window_summary``:
+    equal to ``retrieval.series_metadata(scores, extract_anomalies(scores,
+    ...))`` for the same thresholds, since a detector returns one score
+    row per point — from metadata-scale input and without a join."""
+    meta = summary.groupBy("series_key").agg(
+        F.sum("__n").alias("data_points_analyzed"),
+        F.count("__island").alias("anomalies_found"),
+        F.min("start_ts_ms").alias("start_ts_ms"),
+        F.max("end_ts_ms").alias("end_ts_ms"),
+    )
+    return meta.withColumn(
+        "duration_ms", F.col("end_ts_ms") - F.col("start_ts_ms")
+    )
+
+
 def extract_anomalies(
     scores: DataFrame,
     score_threshold: Optional[float] = None,
@@ -35,38 +132,13 @@ def extract_anomalies(
     where exact is the peak point (ties → earliest peak, deterministic).
 
     Absolute threshold wins when both are given (reference config.py:84-85);
-    with neither, any strictly-positive score is anomalous.
+    with neither, any strictly-positive score is anomalous. The island
+    filter is on a grouping key, so Spark applies it before the
+    aggregation and the unused point count is pruned.
     """
-    w_series = W.partitionBy("series_key")
-    # score as tiebreak: both row_number passes must rank duplicate
-    # timestamps identically or one contiguous run can split/merge
-    # nondeterministically (rows equal in (ts, score) are interchangeable)
-    w_ordered = w_series.orderBy("ts_ms", "score")
-
-    if score_threshold is not None:
-        above = F.col("score") >= float(score_threshold)
-    elif score_percent_threshold is not None:
-        thr = F.max("score").over(w_series) * float(score_percent_threshold)
-        above = (F.col("score") >= thr) & (F.col("score") > 0)
-    else:
-        above = F.col("score") > 0
-
-    flagged = scores.withColumn("__above", above).withColumn(
-        "__rn", F.row_number().over(w_ordered)
+    return summary_windows(
+        window_summary(scores, score_threshold, score_percent_threshold)
     )
-    islands = flagged.filter(F.col("__above")).withColumn(
-        "__island",
-        F.col("__rn")
-        - F.row_number().over(w_ordered),
-    )
-    return islands.groupBy("series_key", "__island").agg(
-        F.min("ts_ms").alias("start_ts_ms"),
-        F.max("ts_ms").alias("end_ts_ms"),
-        F.max_by("ts_ms", F.struct(F.col("score"), -F.col("ts_ms"))).alias(
-            "exact_ts_ms"
-        ),
-        F.max("score").alias("anomaly_score"),
-    ).drop("__island")
 
 
 def refine_anomalies(

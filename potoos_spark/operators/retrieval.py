@@ -294,16 +294,25 @@ def apply_order(df: DataFrame, cfg: TimeSeriesConfig) -> DataFrame:
     return df.orderBy("series_key", order)
 
 
-def read_series(df: DataFrame, cfg: Optional[TimeSeriesConfig] = None) -> DataFrame:
-    """The full retrieval query (reference ``_get_time_series``,
-    /root/reference/potoos/client.py:37-65): filter → latest-dedup →
-    bucket-agg → per-series cap → order."""
+def retrieve_series(
+    df: DataFrame, cfg: Optional[TimeSeriesConfig] = None
+) -> DataFrame:
+    """The retrieval query without its presentation order: filter →
+    latest-dedup → bucket-agg → per-series cap. Detection repartitions
+    by series_key anyway, so a global sort before it is wasted work."""
     cfg = cfg or TimeSeriesConfig()
     df = apply_filters(df, cfg)
     df = apply_latest(df, cfg)
     df = apply_aggregation(df, cfg)
     df = apply_count_limit(df, cfg)
-    return apply_order(df.select(*SERIES_COLS), cfg)
+    return df.select(*SERIES_COLS)
+
+
+def read_series(df: DataFrame, cfg: Optional[TimeSeriesConfig] = None) -> DataFrame:
+    """The full retrieval query (reference ``_get_time_series``,
+    client.py:37-65): ``retrieve_series`` → order."""
+    cfg = cfg or TimeSeriesConfig()
+    return apply_order(retrieve_series(df, cfg), cfg)
 
 
 def min_points_guard(df: DataFrame, min_points: int = 4) -> DataFrame:

@@ -8,8 +8,7 @@ helpers pin the conversions so every format lands in the same frame:
 * batch: parquet / csv / json / orc readers → ``series_frame``
 * binary media: ``read_binary_dir`` (Spark ``binaryFile`` source) →
   the multimodal tier's (doc_id, payload, meta) shape
-* streaming: file-directory stream (schema-required), rate source for
-  load tests / demos
+* streaming: file-directory stream (schema-required)
 * sink: parquet append (batch), and the streaming sinks live with the
   streaming tier (memory / foreachBatch, streaming/monitor.py)
 
@@ -87,23 +86,6 @@ def decode_json_payloads(
         F.from_json(F.col(payload_col).cast("string"), payload_schema).alias("j")
     ).select("j.*")
     return series_frame(decoded, series_key, ts, value, seq=seq)
-
-
-def rate_series(
-    spark: SparkSession, rows_per_second: int = 100, n_series: int = 5
-) -> DataFrame:
-    """Synthetic unbounded series stream from the built-in rate source —
-    deterministic keys, sinusoid-free integer values; for load tests
-    and streaming demos without external infrastructure."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
-    return rate.select(
-        F.concat(F.lit("s"), (F.col("value") % n_series)).alias("series_key"),
-        F.unix_millis(F.col("timestamp")).alias("ts_ms"),
-        (F.col("value") % 97).cast("double").alias("value"),
-        F.col("value").alias("seq"),
-    )
 
 
 def write_batch(df: DataFrame, path: str, fmt: str = "parquet", mode: str = "append") -> None:

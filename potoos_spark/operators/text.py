@@ -10,8 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from .cache import eager_fill
-
 # Small public stopword lists (top function words per language) for the
 # n-gram-free language-ID heuristic and stopword-ratio quality feature.
 STOPWORDS = {

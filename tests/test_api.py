@@ -4,6 +4,8 @@ resolution/override, and the D8 custom-algorithm plugin paths."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -15,6 +17,8 @@ from potoos_spark import (
     register_detector,
     score,
 )
+from potoos_spark.detectors.windows import extract_anomalies, refine_anomalies
+from potoos_spark.operators import retrieval as R
 
 
 def test_check_source_rejects_non_series_frame(spark):
@@ -89,3 +93,141 @@ def test_register_tables_enables_sql(spark):
         "SELECT COUNT(*) AS n FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey"
     ).collect()[0]["n"]
     assert joined > 0
+
+
+# --- monitor()/detect(): one detector pass, same rows as the pieces -------
+
+STEP_MS, BUCKET_MS = 1_000, 5_000
+_RAW_BOUNDS = {
+    "absolute_threshold_value_upper": 80.0,
+    "absolute_threshold_value_lower": 20.0,
+}
+_BUCKETED = TimeSeriesConfig(aggregation_type="avg", bucket_size_msec=BUCKET_MS)
+_RAW = TimeSeriesConfig()
+MONITOR_CASES = {
+    "percent": (_BUCKETED, DetectorConfig(score_percent_threshold=0.5)),
+    "absolute": (_BUCKETED, DetectorConfig(score_threshold=1.0)),
+    "neither": (_BUCKETED, DetectorConfig(algorithm_name="exp_avg_detector")),
+    "refine": (
+        _BUCKETED,
+        DetectorConfig(
+            score_percent_threshold=0.5,
+            refine_algorithm_name="absolute_threshold",
+            refine_algorithm_params=_RAW_BOUNDS,
+        ),
+    ),
+    "score_only": (_BUCKETED, DetectorConfig(score_only=True)),
+    # unbucketed: duplicate timestamps reach the island ordering; an
+    # order-free detector keeps their scores deterministic
+    "raw_absolute": (
+        _RAW,
+        DetectorConfig(
+            algorithm_name="absolute_threshold",
+            algorithm_params=_RAW_BOUNDS,
+            score_threshold=5.0,
+        ),
+    ),
+    "raw_percent": (
+        _RAW,
+        DetectorConfig(
+            algorithm_name="absolute_threshold",
+            algorithm_params=_RAW_BOUNDS,
+            score_percent_threshold=0.4,
+        ),
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def fleet(spark):
+    """Seeded series with spikes and dips, duplicate timestamps in s0,
+    one constant series (all-zero scores) and one series shorter than
+    ``min_points``. Integer values keep bucket averages exact under any
+    summation order."""
+    rng = random.Random(20261020)
+    rows = []
+    for s in range(3):
+        for i in range(60):
+            v = 50 + rng.randint(-5, 5)
+            if rng.random() < 0.1:
+                v += rng.choice((-45, 60))
+            rows.append((f"s{s}", i * STEP_MS, float(v)))
+            if s == 0 and i % 7 == 3:
+                rows.append((f"s{s}", i * STEP_MS, float(v + rng.choice((-40, 40)))))
+    rows += [("flat", i * STEP_MS, 50.0) for i in range(40)]
+    rows += [("short", i * 3 * BUCKET_MS, 99.0) for i in range(3)]
+    rng.shuffle(rows)
+    return spark.createDataFrame(rows, "series_key string, ts_ms bigint, value double")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _composed(points, cfg):
+    """The public pieces, composed: min_points_guard → score →
+    extract_anomalies → refine_anomalies → series_metadata."""
+    points = R.min_points_guard(points)
+    if cfg.score_only:
+        return None, R.series_metadata(points)
+    scores = score(points, cfg)
+    anomalies = extract_anomalies(
+        scores, cfg.score_threshold, cfg.score_percent_threshold
+    )
+    if cfg.refine_algorithm_name:
+        anomalies = refine_anomalies(
+            scores, anomalies, cfg.refine_algorithm_name,
+            cfg.refine_algorithm_params,
+        )
+    return anomalies, R.series_metadata(points, anomalies)
+
+
+@pytest.mark.parametrize("case", sorted(MONITOR_CASES))
+def test_monitor_matches_composed_pieces(spark, fleet, case):
+    ts_cfg, det_cfg = MONITOR_CASES[case]
+    res = PotoosSession(spark).monitor(fleet, ts_cfg, det_cfg)
+    anomalies, meta = _composed(R.read_series(fleet, ts_cfg), det_cfg)
+    assert res.meta.columns == meta.columns
+    got_meta = _rows(res.meta)
+    assert got_meta == _rows(meta)
+    keys = {r[0] for r in got_meta}
+    assert keys == {"s0", "s1", "s2", "flat"}  # short series dropped
+    if det_cfg.score_only:
+        assert res.anomalies is None
+        return
+    assert res.anomalies.columns == anomalies.columns
+    got = _rows(res.anomalies)
+    assert got == _rows(anomalies)
+    assert got and "flat" not in {r[0] for r in got}
+
+
+def test_detect_matches_composed_pieces(spark, fleet):
+    ts_cfg, det_cfg = MONITOR_CASES["percent"]
+    points = R.read_series(fleet, ts_cfg)
+    res = PotoosSession(spark).detect(points, det_cfg)
+    anomalies, meta = _composed(points, det_cfg)
+    assert _rows(res.anomalies) == _rows(anomalies)
+    assert _rows(res.meta) == _rows(meta)
+
+
+def test_monitor_plan_has_no_global_sort_and_few_jobs(spark, fleet):
+    """One poll is one detector pass: no range-partitioned global sort
+    anywhere in monitor's plans, and a bounded number of Spark jobs for
+    monitor() plus collecting both results (a job count is fixed by the
+    plan, not by timing)."""
+    ts_cfg, det_cfg = MONITOR_CASES["percent"]
+    sc = spark.sparkContext
+    group = "test_monitor_plan_jobs"
+    sc.setJobGroup(group, "one monitor poll")
+    try:
+        res = PotoosSession(spark).monitor(fleet, ts_cfg, det_cfg)
+        res.anomalies.collect()
+        res.meta.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 8
+    for frame in (res.scores, res.anomalies, res.meta):
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in plan.lower()

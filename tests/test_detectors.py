@@ -119,6 +119,38 @@ def test_window_extraction_islands(spark):
     assert got_pct == got
 
 
+def test_window_extraction_duplicate_timestamps_and_series_max(spark):
+    # duplicate timestamps order by score, so a below-threshold row at
+    # ts 2000 precedes the above one and splits the run there whatever
+    # the input order; the percent threshold uses the whole series' max,
+    # not a running max (which would flag m's first row)
+    scores = [
+        ("k", 1000, 1.0, 5.0),
+        ("k", 2000, 1.0, 4.0),
+        ("k", 2000, 1.0, 0.0),
+        ("k", 3000, 1.0, 6.0),
+        ("k", 4000, 1.0, 0.0),
+        ("m", 1000, 1.0, 2.0),
+        ("m", 2000, 1.0, 10.0),
+    ]
+    df = spark.createDataFrame(
+        scores, "series_key string, ts_ms bigint, value double, score double"
+    ).coalesce(1)
+    got = sorted(
+        tuple(r) for r in extract_anomalies(df, score_threshold=3.0).collect()
+    )
+    assert got == [
+        ("k", 1000, 1000, 1000, 5.0),
+        ("k", 2000, 3000, 3000, 6.0),
+        ("m", 2000, 2000, 2000, 10.0),
+    ]
+    got_pct = sorted(
+        tuple(r)
+        for r in extract_anomalies(df, score_percent_threshold=0.5).collect()
+    )
+    assert got_pct == got  # k: 0.5 x 6 = 3 as above; m: 0.5 x 10 = 5
+
+
 def test_refine_pass(spark):
     pts = [("k", t, v) for t, v in
            [(1000, 10.0), (2000, 20.0), (3000, 90.0), (4000, 80.0), (5000, 10.0)]]
